@@ -35,9 +35,20 @@ TABLES = (
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One table, read with its schema from the footer-schema memo, so a
+    repeat read of an unchanged path runs no Spark job.
+
+    ``events.ts`` has shipped as both TIMESTAMP(NANOS) — which Spark 4
+    rejects outright (PARQUET_TYPE_ILLEGAL) without the nanos-as-long legacy
+    conf — and plain micros TIMESTAMP_NTZ. Events are read with the legacy
+    conf set (harmless for non-nanos data) and normalized to TimestampType."""
+    from ..session import ensure_conf
+
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        return _load_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        ensure_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.schema(_parquet_schema(spark, path)).parquet(path)
+    return normalize_event_ts(df) if name == "events" else df
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
@@ -58,14 +69,23 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-# Schema of a given events parquet rarely changes within a process, so the
-# footer read happens once per (path, on-disk fingerprint) — not once per
-# streaming query start (each start otherwise pays a batch-read job before
-# the stream begins). The fingerprint (mtime + size of the path, or of its
-# direct children for a directory-shaped dataset) invalidates the entry when
-# the file is rewritten in place, so long-lived drivers never serve a stale
-# schema; it also keeps the cache from growing across rewrites of one path.
-_EVENTS_SCHEMA_CACHE: dict[tuple, object] = {}
+# Footer-schema memo for every parquet read. Without it each read infers the
+# schema anew, which costs the driver a one-task Spark job per path per call
+# (a footer read) before any plan is built. The key is the path's on-disk
+# fingerprint (mtime + size of the path, or of its direct children for a
+# directory-shaped dataset) plus the session confs that change what schema
+# inference returns. The fingerprint invalidates an entry when the file is
+# rewritten in place, so long-lived drivers never serve a stale schema, and
+# the conf values keep e.g. a nanos-as-long read apart from a plain one. A
+# path that cannot be stat'ed (a glob, a remote URI) is never memoized.
+_SCHEMA_MEMO: dict[tuple, object] = {}
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
 
 
 def _path_fingerprint(path: str) -> tuple:
@@ -88,36 +108,36 @@ def _path_fingerprint(path: str) -> tuple:
 
 
 def clear_events_schema_cache() -> None:
-    """Test / long-session hook: drop every cached footer schema."""
-    _EVENTS_SCHEMA_CACHE.clear()
+    """Test / long-session hook: drop every memoized footer schema, of
+    every table."""
+    _SCHEMA_MEMO.clear()
+
+
+def _parquet_schema(spark: SparkSession, path: str):
+    """The schema ``spark.read.parquet(path)`` would infer, read from the
+    footer once per (fingerprint, schema-affecting confs)."""
+    fingerprint = _path_fingerprint(path)
+    if fingerprint[1] is None:
+        return spark.read.parquet(path).schema
+    key = (fingerprint, tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS))
+    if key not in _SCHEMA_MEMO:
+        if len(_SCHEMA_MEMO) >= 64:  # bound growth in long sessions
+            _SCHEMA_MEMO.clear()
+        _SCHEMA_MEMO[key] = spark.read.parquet(path).schema
+    return _SCHEMA_MEMO[key]
 
 
 def events_schema(spark: SparkSession, events_path: str):
     """Footer-only schema read of an events parquet — the explicit schema a
     streaming file source needs, robust to either physical ts encoding
-    (nanos→long under the legacy conf, or native TIMESTAMP/NTZ). Cached per
-    (path, mtime, size); the legacy conf is still pinned per call because
-    the subsequent streaming read needs it regardless of a cache hit."""
+    (nanos→long under the legacy conf, or native TIMESTAMP/NTZ). Served from
+    the footer-schema memo shared with :func:`load_table`; the legacy conf is
+    still pinned per call because the subsequent streaming read needs it
+    regardless of a memo hit."""
     from ..session import ensure_conf
 
     ensure_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = _path_fingerprint(events_path)
-    if key not in _EVENTS_SCHEMA_CACHE:
-        if len(_EVENTS_SCHEMA_CACHE) >= 64:  # bound growth in long sessions
-            _EVENTS_SCHEMA_CACHE.clear()
-        _EVENTS_SCHEMA_CACHE[key] = spark.read.parquet(events_path).schema
-    return _EVENTS_SCHEMA_CACHE[key]
-
-
-def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``events.ts`` has shipped as both TIMESTAMP(NANOS) — which Spark 4
-    rejects outright (PARQUET_TYPE_ILLEGAL) without the nanos-as-long legacy
-    conf — and plain micros TIMESTAMP_NTZ. Read with the legacy conf set
-    (harmless for non-nanos data) and normalize to TimestampType."""
-    from ..session import ensure_conf
-
-    ensure_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
-    return normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    return _parquet_schema(spark, events_path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

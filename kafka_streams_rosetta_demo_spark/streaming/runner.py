@@ -42,11 +42,27 @@ _BACKLOG_BYTES_PER_STATE_PARTITION = 32 * 1024 * 1024
 
 
 @contextmanager
+def _pinned_shuffle_partitions(spark: SparkSession, parts: int | None):
+    """Pin ``spark.sql.shuffle.partitions`` to ``parts`` (``None`` leaves it
+    as is) and restore the value that was in place on entry, so pins unwind
+    like a stack and never leak a count into the next query."""
+    from ..session import ensure_conf
+
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    if parts is not None:
+        ensure_conf(spark, "spark.sql.shuffle.partitions", str(parts))
+    try:
+        yield
+    finally:
+        ensure_conf(spark, "spark.sql.shuffle.partitions", prior)
+
+
+@contextmanager
 def bounded_state_shuffle(spark: SparkSession, key_bound: int):
     """Pin ``spark.sql.shuffle.partitions`` for a streaming topology whose
     keyed state is bounded BY CONSTRUCTION to ``key_bound`` keys, restoring
-    the session default on exit (the invariant every query assumes at
-    entry).
+    on exit the count that was in place on entry (no query leaks its pin
+    into the next).
 
     Why (guide §2.2/§2.4 applied to streaming state): every micro-batch
     pays a FIXED cost per state-store partition — a task, a state commit
@@ -68,16 +84,11 @@ def bounded_state_shuffle(spark: SparkSession, key_bound: int):
     windows) must NOT use this — they keep the scale-parameterised session
     default.
     """
-    from ..session import DEFAULT_SHUFFLE_PARTITIONS, ensure_conf
+    from ..session import DEFAULT_SHUFFLE_PARTITIONS
 
     parts = max(1, min(DEFAULT_SHUFFLE_PARTITIONS, -(-key_bound // _KEYS_PER_STATE_PARTITION)))
-    ensure_conf(spark, "spark.sql.shuffle.partitions", str(parts))
-    try:
+    with _pinned_shuffle_partitions(spark, parts):
         yield
-    finally:
-        ensure_conf(
-            spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)
-        )
 
 
 def backlog_bytes(*paths: str) -> int:
@@ -104,7 +115,8 @@ def backlog_state_shuffle(spark: SparkSession, *paths: str):
     """Size the state exchange of a bounded ``availableNow`` topology whose
     key space is DATA-GRAIN (per-user windows, per-URL dedup sightings,
     stream-stream join rows — no construction bound) from the staged
-    backlog's on-disk bytes, restoring the session default on exit.
+    backlog's on-disk bytes, restoring on exit the count that was in place
+    on entry.
 
     Why this is scale-adaptive, not local tuning (guide §2.2 applied to the
     one exchange AQE cannot touch): every micro-batch pays a FIXED cost per
@@ -132,52 +144,28 @@ def backlog_state_shuffle(spark: SparkSession, *paths: str):
     1.2–1.6x WORSE on the two such topologies — OPTIMIZATION_r14.md).
 
     ``SPARK_GRAFT_BACKLOG_STATE=0`` disables the sizing (A/B lever; the
-    session default then applies, the pre-round-14 behaviour). A backlog of
+    session's count then applies, the pre-round-14 behaviour). A backlog of
     ZERO bytes (missing path, or a staged dir with no ``.parquet`` files)
-    also keeps the session default: there is nothing to size from, and
+    also keeps the session's count: there is nothing to size from, and
     silently serializing every shuffle onto one task on a typo'd path would
-    be the opposite of the adaptive contract (ADVICE r14). Both the sized
-    and the kill-switch leg restore the session default on exit — the
-    invariant every query assumes at entry — so A/B legs leave identical
-    session state behind.
+    be the opposite of the adaptive contract (ADVICE r14). Every leg
+    restores on exit the count that was in place on entry, so A/B legs leave
+    identical session state behind.
     """
     import os
 
-    from ..session import DEFAULT_SHUFFLE_PARTITIONS, ensure_conf
+    from ..session import DEFAULT_SHUFFLE_PARTITIONS
 
-    if os.environ.get("SPARK_GRAFT_BACKLOG_STATE", "1") == "0":
-        try:
-            yield
-        finally:
-            ensure_conf(
-                spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)
+    parts = None  # kill-switch or nothing staged: keep the in-place count
+    if os.environ.get("SPARK_GRAFT_BACKLOG_STATE", "1") != "0":
+        n = backlog_bytes(*paths)
+        if n:
+            parts = max(
+                1,
+                min(DEFAULT_SHUFFLE_PARTITIONS, -(-n // _BACKLOG_BYTES_PER_STATE_PARTITION)),
             )
-        return
-    n = backlog_bytes(*paths)
-    if n == 0:
-        # nothing staged to size from: keep the scale-parameterised default
-        # (never clamp to 1 on a missing/typo'd path), same exit invariant
-        try:
-            yield
-        finally:
-            ensure_conf(
-                spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)
-            )
-        return
-    parts = max(
-        1,
-        min(
-            DEFAULT_SHUFFLE_PARTITIONS,
-            -(-n // _BACKLOG_BYTES_PER_STATE_PARTITION),
-        ),
-    )
-    ensure_conf(spark, "spark.sql.shuffle.partitions", str(parts))
-    try:
+    with _pinned_shuffle_partitions(spark, parts):
         yield
-    finally:
-        ensure_conf(
-            spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)
-        )
 
 
 # Result frames whose pin degraded to DISK_ONLY. Unlike the artifact memos

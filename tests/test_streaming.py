@@ -60,6 +60,84 @@ def test_events_schema_cache_invalidates_on_rewrite(spark, tmp_path):
     assert [f.name for f in second.fields] == ["a", "b"]
 
 
+def _jobs_submitted(spark, fn):
+    """Run ``fn`` and return (its result, ids of the Spark jobs it ran),
+    read from the status tracker once the listener bus has drained."""
+    sc = spark.sparkContext
+    drain = sc._jsc.sc().listenerBus().waitUntilEmpty
+    drain()
+    before = set(sc.statusTracker().getJobIdsForGroup())
+    out = fn()
+    drain()
+    return out, set(sc.statusTracker().getJobIdsForGroup()) - before
+
+
+def test_load_table_repeat_read_runs_no_job(spark, sf_smoke, tmp_path):
+    """The footer-schema memo covers load_table: the first read of a path
+    infers its schema with a Spark job, a repeat read of the unchanged path
+    runs none and yields the same schema."""
+    import shutil
+
+    shutil.copy(f"{sf_smoke}/customer.parquet", tmp_path / "customer.parquet")
+    first, jobs = _jobs_submitted(spark, lambda: load_table(spark, str(tmp_path), "customer"))
+    assert jobs, "the cold read should infer the schema with a job"
+    second, jobs = _jobs_submitted(spark, lambda: load_table(spark, str(tmp_path), "customer"))
+    assert jobs == set()
+    assert second.schema == first.schema
+    assert second.count() == first.count()
+
+
+def test_load_table_memo_serves_rewritten_schema(spark, tmp_path):
+    """A table rewritten in place with a different schema is read with the
+    NEW schema, not the memoized one."""
+    path = str(tmp_path / "customer.parquet")
+    spark.range(3).selectExpr("id AS a").write.mode("overwrite").parquet(path)
+    assert load_table(spark, str(tmp_path), "customer").columns == ["a"]
+    spark.range(3).selectExpr("id AS a", "id * 2 AS b").write.mode("overwrite").parquet(path)
+    assert load_table(spark, str(tmp_path), "customer").columns == ["a", "b"]
+
+
+def test_schema_memo_keys_on_inference_confs(spark, tmp_path):
+    """The confs that change an inferred schema are part of the memo key:
+    one path read under nanosAsLong on and then off is two entries, and a
+    raw binary column reads as string only under binaryAsString."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kafka_streams_rosetta_demo_spark.sources import parquet
+
+    path = str(tmp_path / "customer.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"x", b"y"], pa.binary())}), path)
+    keys = ("spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        parquet.clear_events_schema_cache()
+        for nanos in ("true", "false"):
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", nanos)
+            load_table(spark, str(tmp_path), "customer")
+        assert len(parquet._SCHEMA_MEMO) == 2
+        for as_string, want in (("false", T.BinaryType()), ("true", T.StringType())):
+            spark.conf.set("spark.sql.parquet.binaryAsString", as_string)
+            assert load_table(spark, str(tmp_path), "customer").schema["b"].dataType == want
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_session_turns_off_dataframe_debugging(spark):
+    """get_spark turns off PySpark's per-call call-site capture; an analysis
+    error still raises with its error class."""
+    from pyspark.errors import AnalysisException
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    with pytest.raises(AnalysisException) as err:
+        spark.range(1).select(F.col("no_such_column")).schema
+    assert err.value.getCondition() == "UNRESOLVED_COLUMN.WITH_SUGGESTION"
+
+
 @pytest.fixture(scope="module")
 def split_events_dir(spark, sf_smoke, tmp_path_factory):
     """sf0.001 events split into 3 time-ordered parquet files — 3 micro-
@@ -1126,14 +1204,13 @@ def test_backlog_state_shuffle_sizes_from_bytes_and_restores(
     prior = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         monkeypatch.delenv("SPARK_GRAFT_BACKLOG_STATE", raising=False)
+        spark.conf.set("spark.sql.shuffle.partitions", "7")
         small = tmp_path / "small.parquet"
         small.write_bytes(b"x" * 1024)  # << one partition's worth
         with backlog_state_shuffle(spark, str(small)):
             assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-        # exit restores the session-default invariant every query assumes
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(
-            DEFAULT_SHUFFLE_PARTITIONS
-        )
+        # exit restores the count that was in place on entry
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
 
         # a backlog past the clamp point keeps the scale-parameterised
         # default: the sizing can only LOWER the count for small backlogs,
@@ -1153,19 +1230,47 @@ def test_backlog_state_shuffle_sizes_from_bytes_and_restores(
         # ZERO backlog (missing path / no .parquet files) never clamps to 1:
         # the in-scope conf stays whatever the session had (ADVICE r14)
         with backlog_state_shuffle(spark, str(tmp_path / "missing")):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == str(
-                DEFAULT_SHUFFLE_PARTITIONS
-            )
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
 
         # the A/B kill-switch leaves the in-scope conf untouched, and BOTH
-        # legs restore the session default on exit (symmetric A/B state)
+        # legs restore the entry count on exit (symmetric A/B state)
         monkeypatch.setenv("SPARK_GRAFT_BACKLOG_STATE", "0")
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
         with backlog_state_shuffle(spark, str(small)):
             assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(
-            DEFAULT_SHUFFLE_PARTITIONS
-        )
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prior)
+
+
+def test_state_shuffle_helpers_leave_session_count_unchanged(
+    spark, split_events_dir, tmp_path, monkeypatch
+):
+    """Both state-sizing helpers restore the count the session had, not the
+    engine default: a streaming query run inside them, nested, on a session
+    at 8 partitions leaves it at 8."""
+    from kafka_streams_rosetta_demo_spark.streaming.runner import (
+        backlog_state_shuffle,
+        bounded_state_shuffle,
+    )
+
+    monkeypatch.delenv("SPARK_GRAFT_BACKLOG_STATE", raising=False)
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        with bounded_state_shuffle(spark, 4096):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+        calls = events_to_calls(_stream(spark, split_events_dir, max_files_per_trigger=1))
+        agg = streaming_windowed_call_agg(calls)
+        with backlog_state_shuffle(spark, split_events_dir):
+            with bounded_state_shuffle(spark, 1):
+                pass
+            state = run_update_query_to_state(
+                agg, lambda r: (r.id_telef_origen, r.window_start), str(tmp_path / "ckpt")
+            )
+        assert state
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prior)
 
